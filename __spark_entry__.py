@@ -395,7 +395,7 @@ def q_cdc_dedup_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cdc_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vectorized HTML→text extraction over every change event —
+    """Native HTML→text extraction over every change event —
     the byte-identical-text invariant, checked for all rows."""
     from airbyte_spark.functions.extract import extract_text
 
@@ -2923,7 +2923,7 @@ def q_cdc_segment_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-sum — order/partitioning-independent — and p50/p90/p99 read off
     the merged cumulative counts. Doubles as one more end-to-end check of
     the byte-identical extraction invariant (the oracle measures the
-    *expected* text, Spark measures what the UDF actually extracted)."""
+    *expected* text, Spark measures what the engine actually extracted)."""
     from airbyte_spark.functions.extract import extract_text
     from airbyte_spark.operators.sketches import merged_quantiles, segment_histograms
 
@@ -3164,102 +3164,48 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     cleared the last rotation debt (CORRECTNESS_r01-r04: all 120 then-
     registered queries hold a green driver row; 50/50 in the r4 window).
 
-    Round 5 runs the steady-state rotation rule for the first time:
-      1-4   the four round-5 additions (src_sql_incremental — the
-            DuckDB-backed SQL source, ≡ AbstractJdbcSource;
-            src_http_substream — parent-child fan-out; audio_fp_dedup
-            and video_frame_dedup — the audio and video legs completing
-            the banded-registry dedup family);
-      5-6   the two whose implementation changed since their last green
-            row (img_phash_dedup: 16-bit band keys + probe-side
-            hamming-balls; src_debezium_tail: single-parse micro-batch);
-      7-13  the seven queries whose last green row is ROUND 1 — the
-            stalest lines in the registry (doc_exact_dedup … emb_ivf_topk);
-      14-50 thirty-seven of the forty-eight whose last green row is
-            round 2 (the cdc_/sync_ core). The eleven r2 lines deferred
-            to the next window each share their implementation path with
-            a line that IS in the window: cdc_checkpoint_metrics (rides
-            the merge bounds pass every window replay runs),
-            evt_sessionize (the batch sessionizer is the executed oracle
-            of the streaming-sessionization pytest), cdc_dedup_salted
-            (≡ cdc_dedup_batch's operator), cdc_mor_replay_final_state
-            (MoR leg re-checked r4 via cdc_mor_resolve_read),
-            sync_multistream_atomic (≡ sync_multistream + the WAP path
-            sync_wap_branch covers), sync_clustered_prune /
-            sync_zorder_prune (≡ sync_pruned_read stats pruning),
-            sync_compact_roundtrip / sync_time_travel (manifest
-            maintenance ≡ sync_segmented_manifest + sync_rollback),
-            sync_respec_roundtrip (spec evolution ≡ the add/rename-column
-            lines), sync_catalog_txn (catalog two-phase ≡ sync_wap_branch
-            + sync_catalog_diff).
-    Everything past position 50 holds a green driver row from r3/r4 (or
-    is one of those eleven r2 deferrals) and stays covered by
-    scripts/check_oracle.py + pytest. Next window: the eleven deferrals,
-    then whatever is stalest. Keep tests/test_registry_guard.py's window
-    assertion in sync.
+    The window follows the steady-state rotation rule:
+      1-12  the queries whose implementation changed since their last
+            green row. Text extraction moved from a pandas UDF to native
+            Catalyst expressions (functions/extract.py), so every query
+            that extracts text changed: the direct extract_text users
+            (cdc_extract_text, cdc_segment_quantiles) and every query that
+            replays through the CdcPipeline merge or append job
+            (cdc_replay_final_state … sync_multistream). Lake data files
+            are now zstd and manifest heads are published by a no-clobber
+            link; those reach every lake-backed query, more than the
+            window holds, so the lake lines below cover them;
+      13-22 the ten round-2 lines deferred by the round-5 window
+            (cdc_checkpoint_metrics … sync_catalog_txn; the eleventh,
+            cdc_mor_replay_final_state, sits in 1-12);
+      23-36 the fourteen lines whose last green row is round 3 (the
+            fifteenth, cdc_segment_quantiles, sits in 1-12);
+      37-50 the first fourteen round-4 greens in registry order.
+    Everything past position 50 holds a green gate row from r4 or r5 and
+    stays covered by scripts/check_oracle.py + pytest. Next window: the
+    rest of the round-4 greens, then whatever is stalest. Keep
+    tests/test_registry_guard.py's window assertion in sync.
     """
     return {
         # --- driver window (positions 1-50) -------------------------------
-        # new this round
-        "src_sql_incremental": q_src_sql_incremental,
-        "src_http_substream": q_src_http_substream,
-        "audio_fp_dedup": q_audio_fp_dedup,
-        "video_frame_dedup": q_video_frame_dedup,
-        # implementation changed since last green row
-        "img_phash_dedup": q_img_phash_dedup,
-        "src_debezium_tail": q_src_debezium_tail,
-        # stalest: last green row r1
-        "doc_exact_dedup": q_doc_exact_dedup,
-        "doc_quality": q_doc_quality,
-        "doc_language_id": q_doc_language_id,
-        "doc_minhash_lsh": q_doc_minhash_lsh,
-        "doc_simhash": q_doc_simhash,
-        "emb_cosine_topk": q_emb_cosine_topk,
-        "emb_ivf_topk": q_emb_ivf_topk,
-        # stalest: last green row r2 (39 of 48; deferrals documented above)
-        "cdc_final_state_window": q_cdc_final_state_window,
-        "cdc_incremental_snapshot": q_cdc_incremental_snapshot,
-        "cdc_tx_boundaries": q_cdc_tx_boundaries,
-        "cdc_partial_updates": q_cdc_partial_updates,
-        "cdc_audit_divergence": q_cdc_audit_divergence,
-        "cdc_dedup_batch": q_cdc_dedup_batch,
+        # implementation changed this round: extraction is native in the
+        # merge/append job and in the direct extract_text queries
         "cdc_extract_text": q_cdc_extract_text,
-        "cdc_scd_history": q_cdc_scd_history,
-        "cdc_incremental_cursor": q_cdc_incremental_cursor,
-        "cdc_stream_window_metrics": q_cdc_stream_window_metrics,
+        "cdc_segment_quantiles": q_cdc_segment_quantiles,
+        "cdc_replay_final_state": q_cdc_replay_final_state,
+        "cdc_mor_replay_final_state": q_cdc_mor_replay_final_state,
+        "cdc_mor_resolve_read": q_cdc_mor_resolve_read,
+        "src_debezium_tail": q_src_debezium_tail,
+        "sync_delta_log_replay": q_sync_delta_log_replay,
+        "sync_delete_positions": q_sync_delete_positions,
         "cdc_composite_pk_final_state": q_cdc_composite_pk_final_state,
         "cdc_schema_evolution": q_cdc_schema_evolution,
         "cdc_type_widening": q_cdc_type_widening,
-        "cdc_unnest_children": q_cdc_unnest_children,
-        "cdc_timestamp_parse": q_cdc_timestamp_parse,
-        "cdc_debezium_parse": q_cdc_debezium_parse,
-        "cdc_json_validate": q_cdc_json_validate,
-        "cdc_asof_join": q_cdc_asof_join,
-        "sync_identifier_normalize": q_sync_identifier_normalize,
-        "sync_catalog_diff": q_sync_catalog_diff,
         "sync_multistream": q_sync_multistream,
-        "sync_full_refresh_overwrite": q_sync_full_refresh_overwrite,
-        "sync_append_raw": q_sync_append_raw,
-        "sync_reset_empty": q_sync_reset_empty,
-        "sync_copy_into": q_sync_copy_into,
-        "sync_pruned_read": q_sync_pruned_read,
-        "sync_incremental_changes": q_sync_incremental_changes,
-        "sync_delete_where": q_sync_delete_where,
-        "sync_segmented_manifest": q_sync_segmented_manifest,
-        "sync_delete_equality": q_sync_delete_equality,
-        "sync_add_column_default": q_sync_add_column_default,
-        "sync_update_where": q_sync_update_where,
-        "sync_merge_into": q_sync_merge_into,
-        "sync_replace_where": q_sync_replace_where,
-        "sync_wap_branch": q_sync_wap_branch,
-        "sync_rollback": q_sync_rollback,
-        "sync_rename_column": q_sync_rename_column,
-        # --- past the window ----------------------------------------------
-        # the eleven r2 deferrals (next window's head)
+        # the r2 deferrals
         "cdc_checkpoint_metrics": q_cdc_checkpoint_metrics,
         "evt_sessionize": q_evt_sessionize,
         "cdc_dedup_salted": q_cdc_dedup_salted,
-        "cdc_mor_replay_final_state": q_cdc_mor_replay_final_state,
         "sync_multistream_atomic": q_sync_multistream_atomic,
         "sync_clustered_prune": q_sync_clustered_prune,
         "sync_zorder_prune": q_sync_zorder_prune,
@@ -3267,7 +3213,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sync_time_travel": q_sync_time_travel,
         "sync_respec_roundtrip": q_sync_respec_roundtrip,
         "sync_catalog_txn": q_sync_catalog_txn,
-        # green r4 (the round-4 window), unchanged since
+        # stalest: last green row r3
+        "web_sitemap_frontier": q_web_sitemap_frontier,
+        "doc_train_split": q_doc_train_split,
+        "doc_pack_sequences": q_doc_pack_sequences,
+        "doc_decontaminate": q_doc_decontaminate,
+        "doc_mix_plan": q_doc_mix_plan,
+        "doc_quota_by_lang": q_doc_quota_by_lang,
+        "doc_pii_scrub": q_doc_pii_scrub,
+        "doc_repetition": q_doc_repetition,
+        "doc_vocab_topk": q_doc_vocab_topk,
+        "doc_lm_surprisal": q_doc_lm_surprisal,
+        "doc_passages": q_doc_passages,
+        "cdc_url_quality": q_cdc_url_quality,
+        "cdc_postings_incremental": q_cdc_postings_incremental,
+        "sync_sql_over_lake": q_sync_sql_over_lake,
+        # stalest: last green row r4 (14 of 44)
         "doc_corpus_stats": q_doc_corpus_stats,
         "doc_sample_mix": q_doc_sample_mix,
         "cdc_url_domains": q_cdc_url_domains,
@@ -3278,12 +3239,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "src_airbyte_messages": q_src_airbyte_messages,
         "doc_bpe_merges": q_doc_bpe_merges,
         "audio_mel_features": q_audio_mel_features,
-        "sync_delta_log_replay": q_sync_delta_log_replay,
         "doc_bpe_tokens": q_doc_bpe_tokens,
         "cdc_matview_incremental": q_cdc_matview_incremental,
         "sync_constraint_gate": q_sync_constraint_gate,
-        "sync_delete_positions": q_sync_delete_positions,
         "sync_metadata_stats": q_sync_metadata_stats,
+        # --- past the window ----------------------------------------------
+        # green r4, unchanged since
         "sync_distinct_urls_sketch": q_sync_distinct_urls_sketch,
         "sync_hot_domain_hitters": q_sync_hot_domain_hitters,
         "src_http_offset": q_src_http_offset,
@@ -3314,24 +3275,51 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "web_recrawl_schedule": q_web_recrawl_schedule,
         "web_fetch_budget": q_web_fetch_budget,
         "cdc_unnest_nested": q_cdc_unnest_nested,
-        "cdc_mor_resolve_read": q_cdc_mor_resolve_read,
-        "cdc_replay_final_state": q_cdc_replay_final_state,
-        # green r3, unchanged since
-        "web_sitemap_frontier": q_web_sitemap_frontier,
-        "doc_train_split": q_doc_train_split,
-        "doc_pack_sequences": q_doc_pack_sequences,
-        "doc_decontaminate": q_doc_decontaminate,
-        "doc_mix_plan": q_doc_mix_plan,
-        "doc_quota_by_lang": q_doc_quota_by_lang,
-        "doc_pii_scrub": q_doc_pii_scrub,
-        "doc_repetition": q_doc_repetition,
-        "doc_vocab_topk": q_doc_vocab_topk,
-        "doc_lm_surprisal": q_doc_lm_surprisal,
-        "doc_passages": q_doc_passages,
-        "cdc_url_quality": q_cdc_url_quality,
-        "cdc_segment_quantiles": q_cdc_segment_quantiles,
-        "cdc_postings_incremental": q_cdc_postings_incremental,
-        "sync_sql_over_lake": q_sync_sql_over_lake,
+        # green r5 (the round-5 window)
+        "src_sql_incremental": q_src_sql_incremental,
+        "src_http_substream": q_src_http_substream,
+        "audio_fp_dedup": q_audio_fp_dedup,
+        "video_frame_dedup": q_video_frame_dedup,
+        "img_phash_dedup": q_img_phash_dedup,
+        "doc_exact_dedup": q_doc_exact_dedup,
+        "doc_quality": q_doc_quality,
+        "doc_language_id": q_doc_language_id,
+        "doc_minhash_lsh": q_doc_minhash_lsh,
+        "doc_simhash": q_doc_simhash,
+        "emb_cosine_topk": q_emb_cosine_topk,
+        "emb_ivf_topk": q_emb_ivf_topk,
+        "cdc_final_state_window": q_cdc_final_state_window,
+        "cdc_incremental_snapshot": q_cdc_incremental_snapshot,
+        "cdc_tx_boundaries": q_cdc_tx_boundaries,
+        "cdc_partial_updates": q_cdc_partial_updates,
+        "cdc_audit_divergence": q_cdc_audit_divergence,
+        "cdc_dedup_batch": q_cdc_dedup_batch,
+        "cdc_scd_history": q_cdc_scd_history,
+        "cdc_incremental_cursor": q_cdc_incremental_cursor,
+        "cdc_stream_window_metrics": q_cdc_stream_window_metrics,
+        "cdc_unnest_children": q_cdc_unnest_children,
+        "cdc_timestamp_parse": q_cdc_timestamp_parse,
+        "cdc_debezium_parse": q_cdc_debezium_parse,
+        "cdc_json_validate": q_cdc_json_validate,
+        "cdc_asof_join": q_cdc_asof_join,
+        "sync_identifier_normalize": q_sync_identifier_normalize,
+        "sync_catalog_diff": q_sync_catalog_diff,
+        "sync_full_refresh_overwrite": q_sync_full_refresh_overwrite,
+        "sync_append_raw": q_sync_append_raw,
+        "sync_reset_empty": q_sync_reset_empty,
+        "sync_copy_into": q_sync_copy_into,
+        "sync_pruned_read": q_sync_pruned_read,
+        "sync_incremental_changes": q_sync_incremental_changes,
+        "sync_delete_where": q_sync_delete_where,
+        "sync_segmented_manifest": q_sync_segmented_manifest,
+        "sync_delete_equality": q_sync_delete_equality,
+        "sync_add_column_default": q_sync_add_column_default,
+        "sync_update_where": q_sync_update_where,
+        "sync_merge_into": q_sync_merge_into,
+        "sync_replace_where": q_sync_replace_where,
+        "sync_wap_branch": q_sync_wap_branch,
+        "sync_rollback": q_sync_rollback,
+        "sync_rename_column": q_sync_rename_column,
     }
 
 

@@ -82,13 +82,6 @@ def drop_table_sql(schema_name: str, table: str, dialect: str) -> str:
     )
 
 
-def truncate_table_sql(schema_name: str, table: str, dialect: str) -> str:
-    return (
-        f"TRUNCATE TABLE "
-        f"{quote_ident(schema_name, dialect)}.{quote_ident(table, dialect)};"
-    )
-
-
 def copy_table_sql(
     schema_name: str, src_table: str, dst_table: str, dialect: str
 ) -> str:
@@ -384,8 +377,8 @@ def normalize_child_sql(
     identical child tables. Idempotence is at parent-row granularity: the
     anti-join on the raw ab_id re-normalizes only parents whose children
     are missing (same granularity as the parent insert's ab_id
-    anti-join). NULL / absent nested values produce no child rows (the
-    reference's null-safety filter).
+    anti-join). NULL, JSON-null or wrongly typed nested values produce no
+    child rows (the reference's null-safety filter).
 
     Only the postgres flavor is rendered (and executed on DuckDB in
     tests); other dialects raise rather than emit untested SQL."""
@@ -428,8 +421,12 @@ def normalize_child_sql(
         f"MD5({child_hash}) AS {quote_ident(f'_airbyte_{child}_hashid', dialect)}"
     )
     cols = ",\n  ".join(sel)
+    # a JSON null (or a value of the wrong kind) is NOT NULL to SQL:
+    # jsonb_array_length raises on it and an object child would get an
+    # all-NULL row, so both paths test the JSON type instead
+    typed = f"jsonb_typeof({node}) = '{'array' if is_array else 'object'}'"
     guard = (
-        f"WHERE {node} IS NOT NULL\n"
+        f"WHERE {typed}\n"
         f"  AND NOT EXISTS (SELECT 1 FROM {s}.{ct} c "
         f"WHERE c.{AB_ID} = r.{AB_ID})"
     )
@@ -438,7 +435,8 @@ def normalize_child_sql(
             f"INSERT INTO {s}.{ct}\n"
             f"SELECT\n  {cols}\nFROM {s}.{raw} r\n{guard};"
         )
-    arr_len = f"jsonb_array_length({AB_DATA}->'{field.name}')"
+    # CASE, not AND: postgres may reorder the quals of a WHERE clause
+    arr_len = f"CASE WHEN {typed} THEN jsonb_array_length({node}) END"
     return (
         f"INSERT INTO {s}.{ct}\n"
         f"WITH RECURSIVE g(i) AS (\n"
@@ -495,8 +493,6 @@ def render_sync_script(
     # overwrite resets via DROP+CREATE rather than TRUNCATE: same
     # transactional swap, but portable to engines whose indexes can't
     # truncate-then-reinsert identical keys inside one transaction
-    # (truncate_table_sql stays exported for the SqlOperations parity
-    # surface)
     reset = (
         [drop_table_sql(schema_name, raw, dialect),
          create_raw_table_sql(schema_name, raw, dialect)]

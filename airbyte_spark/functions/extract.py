@@ -1,27 +1,37 @@
-"""Vectorized HTML→text extraction (Arrow/pandas UDFs, no per-row Python UDFs).
+r"""HTML→text extraction as Catalyst expressions, plus the multimodal UDFs.
 
 The input_hint's per-row invariant is *byte-identical extracted text per
-url*, so the extraction rule is pinned here in one place and covered by
-golden-bytes tests (tests/test_extract.py):
+url*. `_extract_one` is the reference statement of the rule, in Python
+over bytes:
 
-  1. decode html bytes as UTF-8 (errors=replace)
-  2. drop <script>/<style> elements wholesale
-  3. replace every remaining tag with a single space
+  1. drop <script>/<style> elements wholesale
+  2. replace every remaining tag with a single space
+  3. decode as UTF-8 (errors=replace)
   4. decode the five core HTML entities
   5. collapse whitespace runs to one space; strip ends
 
-A real deployment would swap step 2-3 for selectolax/lxml behind the same
-function signature; those libs are absent in this container, and the regex
-rule is deterministic and version-pinned by construction.
+`extract_text` is what the engine runs: the same rule as Spark SQL
+expressions, byte-identical to `_extract_one` (golden and differential
+tests in tests/test_extract.py), so the merge job runs no Python. Where
+the translation is not one-to-one:
+
+  - it decodes first, with `make_valid_utf8` (one U+FFFD per maximal
+    invalid subpart, as Python). Stripping afterwards is equivalent: a
+    decoder never folds an ASCII byte into a replacement;
+  - the JDK's `\b` is Unicode-aware and Python's bytes-mode `\b` is not,
+    so the boundary after the element name is spelled out;
+  - Python's str `\s` is `str.isspace()`, wider than Java's default
+    `[ \t\n\x0B\f\r]`: the extra code points (computed from Python) are
+    translated to spaces first.
 
 This role corresponds to the reference's normalization "transform" stage
-(raw JSON blob → typed columns, base-normalization stream_processor.py) —
-payload-specific cleansing that runs inside the engine, vectorized.
+(raw JSON blob → typed columns, base-normalization stream_processor.py).
 """
 
 from __future__ import annotations
 
 import re
+import sys
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -54,25 +64,25 @@ def _extract_one(html: bytes | None) -> str | None:
     return _WS_RE.sub(" ", text).strip()
 
 
-@pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """Arrow-batched extraction; ~the whole batch crosses in one Arrow buffer."""
-    return html.map(_extract_one)
+# Java regexes (Spark's regexp_replace), the counterparts of _SCRIPT_RE and
+# _TAG_RE on decoded text; `[ \t\n\x0B\f\r]` is Python's bytes-mode \s
+_SCRIPT_JRE = r"(?is)<(script|style)(?![A-Za-z0-9_]).*?</\1[ \t\n\x0B\f\r]*>"
+_TAG_JRE = r"<[^>]*>"
+# str.isspace() code points outside Java's default \s
+_WIDE_WS = "".join(
+    ch for ch in map(chr, range(sys.maxunicode + 1)) if ch.isspace() and ch not in " \t\n\x0b\x0c\r"
+)
 
 
 def extract_text(html: Column) -> Column:
-    return extract_text_udf(html)
-
-
-def with_extracted_text(df, html_col: str = "html", out_col: str = "text"):
-    """Fill `out_col` from html where the change event didn't carry text
-    (CDC deletes carry only the key — keep their text NULL)."""
-    return df.withColumn(
-        out_col,
-        F.when(F.col(html_col).isNotNull(), extract_text(F.col(html_col))).otherwise(
-            F.col(out_col) if out_col in df.columns else F.lit(None).cast("string")
-        ),
-    )
+    """`_extract_one` as native expressions over a binary html column."""
+    text = F.make_valid_utf8(html.cast("string"))
+    text = F.regexp_replace(text, _SCRIPT_JRE, " ")
+    text = F.regexp_replace(text, _TAG_JRE, " ")
+    for ent, ch in _ENTITIES:
+        text = F.replace(text, F.lit(ent), F.lit(ch))
+    text = F.translate(text, _WIDE_WS, " " * len(_WIDE_WS))
+    return F.btrim(F.regexp_replace(text, r"\s+", " "), F.lit(" "))
 
 
 # --- multimodal stubs -----------------------------------------------------------

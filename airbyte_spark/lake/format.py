@@ -7,8 +7,9 @@ swap, destination-jdbc JdbcBufferedConsumerFactory.java:153-194, and we'd
 get from Iceberg in deployment):
 
   1. atomic commits — a snapshot manifest is the unit of visibility,
-     created with O_EXCL so concurrent writers conflict instead of corrupt
-     (optimistic concurrency, Iceberg-style);
+     published with a no-clobber hard link so concurrent writers conflict
+     instead of corrupt and readers never see a partial head (optimistic
+     concurrency, Iceberg-style);
   2. snapshot isolation + time travel — readers resolve the latest (or any
      historical) manifest and only see files listed there;
   3. schema evolution — each file records the schema_id it was written
@@ -57,6 +58,10 @@ from airbyte_spark.schema import evolve
 _LAKE_DIR = "_lake"
 _DATA_DIR = "data"
 _SEG_DIR = "segs"  # immutable manifest segments, shared by main + branches
+# data-file codec, a fixed table-format choice (≡ Iceberg's default
+# write.parquet.compression-codec since 1.4); a COW commit rewrites whole
+# files, so bytes per file are bytes per commit
+_DATA_CODEC = "zstd"
 
 # Segmented-manifest defaults (per-table overrides via properties
 # manifest.segment_threshold / manifest.committed_tail / manifest.max_segments;
@@ -129,15 +134,6 @@ class PartitionSpec:
     @staticmethod
     def bucket(source: str, n: int) -> "PartitionSpec":
         return PartitionSpec((PartitionField("p_bucket", "bucket", source, n),))
-
-    @staticmethod
-    def days_and_bucket(ts_col: str, key_col: str, n: int) -> "PartitionSpec":
-        return PartitionSpec(
-            (
-                PartitionField("p_day", "days", ts_col),
-                PartitionField("p_bucket", "bucket", key_col, n),
-            )
-        )
 
     def names(self) -> list[str]:
         return [f.name for f in self.fields]
@@ -391,7 +387,7 @@ class LakeTable:
         """Convert a hydrated manifest back to its storage form, writing
         segment files for the parts that changed. Returns (storage dict,
         newly written segment rel-paths) — the caller GCs the new segments
-        if the O_EXCL publish loses its race.
+        if the head publish loses its race.
 
         Delta detection is structural: a prior file segment is kept BY
         REFERENCE iff every path it holds is still live (entries are
@@ -499,19 +495,26 @@ class LakeTable:
         return m, new_segs
 
     def _write_manifest(self, manifest: dict) -> int:
-        """O_EXCL create → atomic manifest publish. Returns the version on
+        """Atomic no-clobber manifest publish. Returns the version on
         success; raises CommitConflict if another writer already published
         this version (the caller must re-read the winning manifest and
         re-apply its delta — blindly bumping the version here would commit
         stale content and silently drop the winner's files/committed
-        entries, a lost update). Segment files written for this attempt are
-        reclaimed when the publish loses the race — the winner's segments
-        are untouched (they were written under different uuid names)."""
+        entries, a lost update). The head is written whole into a
+        dot-prefixed temp file (a crash's leftovers are no version; vacuum
+        reaps them) and published by `os.link`, which never clobbers, so
+        readers never see a partial head. Segment files written for this
+        attempt are reclaimed when the publish loses the race — the
+        winner's segments are untouched (different uuid names)."""
         storage, new_segs = self._dehydrate(manifest)
         v = storage["version"]
+        tmp = os.path.join(self._meta_dir(), f".v{v:09d}.{uuid.uuid4().hex[:8]}.tmp")
+        with open(tmp, "x") as fh:
+            json.dump(storage, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
         try:
-            with open(self._manifest_path(v), "x") as fh:
-                json.dump(storage, fh)
+            os.link(tmp, self._manifest_path(v))
             return v
         except FileExistsError:
             for rel in new_segs:
@@ -522,6 +525,8 @@ class LakeTable:
                 except OSError:
                     pass
             raise CommitConflict(f"version {v} already committed by another writer")
+        finally:
+            os.remove(tmp)
 
     # ---- schema ----
 
@@ -1390,12 +1395,12 @@ class LakeTable:
         pnames = spec.names()
         for f in spec.fields:
             writer_df = writer_df.withColumn(f.name, f.expr())
+        if pnames and one_file_per_partition:
+            writer_df = writer_df.repartition(*[F.col(n) for n in pnames])
+        writer = writer_df.write.option("compression", _DATA_CODEC).mode("overwrite")
         if pnames:
-            if one_file_per_partition:
-                writer_df = writer_df.repartition(*[F.col(n) for n in pnames])
-            writer_df.write.partitionBy(*pnames).mode("overwrite").parquet(out_dir)
-        else:
-            writer_df.write.mode("overwrite").parquet(out_dir)
+            writer = writer.partitionBy(*pnames)
+        writer.parquet(out_dir)
         m = self.manifest()
         sid = int(m["schema_id"])
         bloom_col = m.get("properties", {}).get("bloom.key")
@@ -1909,7 +1914,7 @@ class LakeTable:
 
         `grace_s`: skip unreferenced files younger than this many seconds
         (≡ Iceberg remove_orphan_files' older_than). A writer stages data
-        files and manifest segments BEFORE its O_EXCL head publish, so a
+        files and manifest segments BEFORE its head publish, so a
         vacuum racing an in-flight commit would see them as orphans and
         corrupt the winning snapshot; any scheduled vacuum that can
         overlap a writer must set grace_s above the longest commit
@@ -1975,6 +1980,13 @@ class LakeTable:
                 ap = os.path.join(self.path, rel)
                 if rel not in live_segs and not _young(ap):
                     _SEG_CACHE.pop(ap, None)
+                    os.remove(ap)
+                    removed += 1
+        # manifest heads a crashed writer staged but never published
+        for hd in self._head_dirs():
+            for name in os.listdir(hd):
+                ap = os.path.join(hd, name)
+                if name.startswith(".v") and name.endswith(".tmp") and not _young(ap):
                     os.remove(ap)
                     removed += 1
         return removed
@@ -2085,13 +2097,16 @@ class LakeTable:
             self._write_refs(refs)
         return len(victims)
 
+    def _head_dirs(self) -> list[str]:
+        """Manifest-head directories: main chain + all branch chains."""
+        return [os.path.join(self.path, _LAKE_DIR)] + [
+            os.path.join(self.path, _LAKE_DIR, "branches", b) for b in self.branches()
+        ]
+
     def _all_manifest_paths(self) -> list[str]:
         """Every retained manifest file — main chain + all branch chains."""
-        dirs = [os.path.join(self.path, _LAKE_DIR)]
-        for b in self.branches():
-            dirs.append(os.path.join(self.path, _LAKE_DIR, "branches", b))
         out = []
-        for d in dirs:
+        for d in self._head_dirs():
             if not os.path.isdir(d):
                 continue
             out.extend(

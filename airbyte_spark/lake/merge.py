@@ -199,7 +199,9 @@ def merge_upsert(
     of the merge window — raw micro-batches are fine).
 
     `finalize(df, is_batch_col)` — optional projection hook applied to the
-    winning rows (e.g. vectorized text extraction for fresh rows only).
+    winning rows (e.g. text extraction for fresh rows only). Keep it
+    native: `CASE WHEN` does not short-circuit a Python UDF, which would
+    run on every rewritten row and put Python into every write task.
 
     Composite primary keys are first-class (≡ the reference's list-valued
     source_defined_primary_key, airbyte_protocol.yaml:150, and the

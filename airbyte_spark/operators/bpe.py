@@ -201,11 +201,3 @@ def with_bpe_tokens(
 
     out = df.withColumn(tokens_col, bpe_udf(F.col(text_col)))
     return out.withColumn(count_col, F.size(F.col(tokens_col)).cast("int"))
-
-
-def vocab_from_merges(merges: list[tuple[str, str]], base: Iterable[str]) -> list[str]:
-    """Final vocabulary = base symbols + one new symbol per merge."""
-    vocab = list(dict.fromkeys(base))
-    for a, b in merges:
-        vocab.append(a + b)
-    return vocab

@@ -97,17 +97,3 @@ def valid_records(df: DataFrame, cfg: StreamConfig):
         F.count(F.lit(1)).alias("n_total"),
     )
     return observed.filter(ok), obs
-
-
-def exact_duplicates(df: DataFrame, cfg: StreamConfig) -> DataFrame:
-    """Intra-batch exact-duplicate elimination over (pk, all order cols) —
-    ≡ the reference's second dedup window (stream_processor.py:715-730),
-    which drops at-least-once redeliveries of the *same* event."""
-    w = Window.partitionBy(*cfg.primary_key, *cfg.order_cols).orderBy(
-        F.col(cfg.order_tiebreakers[-1]).asc()
-    )
-    return (
-        df.withColumn("_row_num", F.row_number().over(w))
-        .filter(F.col("_row_num") == 1)
-        .drop("_row_num")
-    )

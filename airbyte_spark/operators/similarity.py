@@ -39,11 +39,6 @@ def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    da, db = _dvec(a), _dvec(b)
-    return dot(da, db) / (norm(da) * norm(db))
-
-
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,

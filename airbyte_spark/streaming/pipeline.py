@@ -38,14 +38,16 @@ from airbyte_spark.lake.merge import (
     resolve_stored,
 )
 from airbyte_spark.protocol import StreamConfig
-from airbyte_spark.schema import CHANGE_SCHEMA, PAGE_SCHEMA, TARGET_META_COLS
+from airbyte_spark.schema import CHANGE_SCHEMA, PAGE_SCHEMA
 
 
 def _extract_winners(df: DataFrame, is_batch) -> DataFrame:
-    """Vectorized HTML→text for freshly-merged live rows only; carried-over
-    rows keep their stored text and tombstones skip the UDF entirely
+    """HTML→text for freshly-merged live rows only; carried-over rows keep
+    their stored text and tombstones skip extraction entirely
     (byte-identical invariant: the rule is pinned in functions/extract.py
-    and applied exactly once per winning version)."""
+    and applied exactly once per winning version). The guard saves work
+    only because `extract_text` is native: `CASE WHEN` does not
+    short-circuit a Python UDF."""
     fresh_live = is_batch & F.col("html").isNotNull() & F.col("_ab_cdc_deleted_at").isNull()
     return df.withColumn(
         "text",
@@ -518,8 +520,3 @@ class CdcPipeline:
             # would resurrect the key at the next read-time resolve
             compact_versions(self.table, self.cfg)
         return expire_tombstones(self.table, self.cfg, watermark)
-
-    def final_pages(self) -> DataFrame:
-        """Payload view (drops engine meta columns)."""
-        df = self.final_state()
-        return df.drop(*[c for c in TARGET_META_COLS if c in df.columns])

@@ -1,13 +1,13 @@
 """Benchmark harness — prints ONE JSON line with headline timings.
 
-Headline: full CDC replay (dedup → vectorized extract → LWW merge into the
+Headline: full CDC replay (dedup → native text extract → LWW merge into the
 lake table) of the sf change stream, reported as seconds plus derived
 events/sec (the BASELINE.json metric). Secondary queries cover the other
 operator families so regressions show up per-operator.
 
 Env:
   SPARK_GRAFT_SF_DIR  input dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    local[] parallelism (default 32)
+  SPARK_GRAFT_CPUS    local[] parallelism (default: the host's core count)
   BENCH_BATCHES       number of replay micro-batches (default 10)
 """
 
@@ -35,7 +35,7 @@ def time_one(fn):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     n_batches = int(os.environ.get("BENCH_BATCHES", "10"))
     spark = get_spark("bench", master=f"local[{cpus}]", shuffle_partitions=int(cpus))
     spark.sparkContext.setLogLevel("ERROR")
@@ -56,8 +56,8 @@ def main() -> None:
     # -- headline: full CDC replay into a fresh lake table --------------------
     work = tempfile.mkdtemp(prefix="bench_lake_")
     try:
-        # Warmup: one throwaway micro-batch to pay JVM codegen + Python/Arrow
-        # worker startup once, so the timed run measures steady-state
+        # Warmup: one throwaway micro-batch to pay JVM codegen once, so the
+        # timed run measures steady-state
         # throughput (what a long-running stream actually sees).
         warm = CdcPipeline.create_target(spark, f"{work}/warmup", n_buckets=int(cpus))
         warm.apply_batch(changelog.filter(F.col("checkpoint_id") == 0), "warm-0")

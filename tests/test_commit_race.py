@@ -12,6 +12,7 @@ regrouped replay after tombstone expiry must not resurrect deleted keys.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pyspark.sql.functions as F
 import pytest
@@ -103,3 +104,66 @@ def test_regrouped_replay_cannot_resurrect_expired_tombstone(spark, sf_dir, tmp_
     after = sorted(r["url"] for r in pipe.final_state().select("url").collect())
     assert after == before
     assert not deleted_urls & set(after)
+
+
+def test_concurrent_reader_never_sees_a_partial_head(spark, tmp_path):
+    """Readers racing a writer always parse a complete manifest head: the
+    head is written whole under a temp name and published by a no-clobber
+    link (red on a create-then-write publish, which exposes an empty or
+    half-written head: JSONDecodeError)."""
+    import sys
+    import threading
+
+    path = str(tmp_path / "t")
+    t = LakeTable.create(spark, path, SCHEMA, PartitionSpec())
+    # a large head makes a partial write wide enough to be seen
+    t._update_properties({"pad": "x" * 400_000}, set(), "set-properties")
+    done = threading.Event()
+    errors: list[BaseException] = []
+    reads = [0]
+
+    def read_loop():
+        reader = LakeTable(spark, path)
+        while not done.is_set():
+            try:
+                assert reader.manifest()["properties"]["pad"]
+                reads[0] += 1
+            except Exception as exc:  # noqa: BLE001 — any failure counts
+                errors.append(exc)
+                return
+
+    readers = [threading.Thread(target=read_loop) for _ in range(6)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for r in readers:
+            r.start()
+        for i in range(60):
+            t.commit([], operation="append", checkpoint_key=f"k{i}")
+    finally:
+        done.set()
+        sys.setswitchinterval(switch)
+        for r in readers:
+            r.join(timeout=60)
+    assert not any(r.is_alive() for r in readers)
+    assert not errors, errors[:3]
+    assert reads[0] > 0
+    assert t.current_version() == 62 and len(t.committed()) == 60
+    assert not [n for n in os.listdir(os.path.join(path, "_lake")) if n.startswith(".")]
+
+
+def test_stale_head_temp_is_ignored_then_reaped(spark, tmp_path):
+    """A writer killed between writing its temp head and linking it leaves
+    a dot-prefixed temp file: it is no version, fsck ignores it, and
+    vacuum reaps it once it is older than the grace period."""
+    path = str(tmp_path / "t")
+    t = LakeTable.create(spark, path, SCHEMA, PartitionSpec())
+    t.commit(_stage(t, spark, [("a", 1)]), operation="append")
+    stale = os.path.join(path, "_lake", ".v000000003.0123abcd.tmp")
+    with open(stale, "w") as fh:
+        fh.write('{"version": 3, "fil')  # torn
+    assert t.current_version() == 2 and t.manifest()["version"] == 2
+    assert t.fsck() == []
+    assert t.vacuum(grace_s=3600) == 0 and os.path.exists(stale)
+    assert t.vacuum() == 1 and not os.path.exists(stale)
+    assert t.fsck() == [] and t.current_version() == 2

@@ -170,6 +170,16 @@ def test_normalization_types_raw_json_back_to_source(spark, sf_dir, tmp_path):
     assert con.sql('SELECT count(*) FROM "public"."events"').fetchone()[0] == 200
 
 
+def _postgres_json_on_duckdb(con, script: str) -> str:
+    """DuckDB speaks the postgres normalization script modulo the JSONB
+    spellings: rename the types and length function, and define
+    jsonb_typeof (postgres answers in lower case, DuckDB in upper)."""
+    con.execute("CREATE OR REPLACE MACRO jsonb_typeof(j) AS lower(json_type(j))")
+    return script.replace(" JSONB", " JSON").replace(
+        "jsonb_array_length", "json_array_length"
+    )
+
+
 def test_normalization_nested_child_tables_match_spark_unnest(
     spark, sf_dir, tmp_path
 ):
@@ -216,10 +226,7 @@ def test_normalization_nested_child_tables_match_spark_unnest(
     con = duckdb.connect()
     con.execute(open(path).read().replace(" JSONB", " JSON"))
     norm = render_normalization_script("public", "events", src.schema, "postgres")
-    # DuckDB speaks the postgres script modulo the JSONB spellings
-    norm_dd = norm.replace(" JSONB", " JSON").replace(
-        "jsonb_array_length", "json_array_length"
-    )
+    norm_dd = _postgres_json_on_duckdb(con, norm)
     con.execute(norm_dd)
 
     # parent typed table: scalar columns only, nested ones in children
@@ -297,3 +304,69 @@ def test_normalization_dialect_rendering():
     assert "JSON_VALUE(_airbyte_data, '$.score')" in bq and "FLOAT64" in bq
     my = normalize_sql("public", "s", schema, "mysql")
     assert "JSON_UNQUOTE(JSON_EXTRACT(_airbyte_data, '$.name'))" in my
+
+
+def test_child_normalization_guards_on_json_type():
+    """A JSON-null nested value is NOT NULL to SQL. On postgres,
+    jsonb_array_length raises on it (aborting the whole normalization)
+    and an object child got an all-NULL row. Both paths must test the
+    JSON type: the array length only under a CASE on jsonb_typeof (the
+    recursive-CTE bound and the row bound), and the row guard on 'array' /
+    'object'. DuckDB's json_array_length returns 0 for a JSON null, so the
+    array half is pinned on the rendered SQL."""
+    from pyspark.sql.types import (
+        ArrayType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from airbyte_spark.destinations_sql import (
+        normalize_child_sql,
+        render_normalization_script,
+    )
+
+    schema = StructType(
+        [
+            StructField("id", LongType()),
+            StructField("items", ArrayType(StructType([StructField("sku", StringType())]))),
+            StructField("meta", StructType([StructField("lang", StringType())])),
+        ]
+    )
+    items = normalize_child_sql("public", "ev", schema, schema["items"], "postgres")
+    meta = normalize_child_sql("public", "ev", schema, schema["meta"], "postgres")
+    arr = "(_airbyte_data->'items')"
+    guarded_len = (
+        f"CASE WHEN jsonb_typeof({arr}) = 'array' THEN jsonb_array_length({arr}) END"
+    )
+    # every length call sits under the type test: CTE bound and row bound
+    assert items.count("jsonb_array_length(") == 2
+    assert items.count(guarded_len) == 2
+    assert f"max({guarded_len})" in items
+    assert f"g.i < {guarded_len};" in items
+    assert f"WHERE jsonb_typeof({arr}) = 'array'\n" in items
+    assert "IS NOT NULL" not in items
+    assert "WHERE jsonb_typeof((_airbyte_data->'meta')) = 'object'\n" in meta
+    assert "IS NOT NULL" not in meta
+
+    # executed: JSON nulls and wrongly typed values produce no child rows
+    con = duckdb.connect()
+    con.execute('CREATE SCHEMA "public"')
+    con.execute(create_raw_table_sql("public", "_airbyte_raw_ev", "postgres").replace(" JSONB", " JSON"))
+    rows = [
+        {"id": 1, "items": [{"sku": "a"}, {"sku": "b"}], "meta": {"lang": "en"}},
+        {"id": 2, "items": None, "meta": None},
+        {"id": 3, "items": {"sku": "not-an-array"}, "meta": ["not-an-object"]},
+        {"id": 4},
+    ]
+    for i, r in enumerate(rows):
+        con.execute(
+            'INSERT INTO "public"."_airbyte_raw_ev" VALUES (?, ?, now())',
+            [f"ab-{i}", json.dumps(r)],
+        )
+    con.execute(
+        _postgres_json_on_duckdb(con, render_normalization_script("public", "ev", schema, "postgres"))
+    )
+    assert con.sql('SELECT sku FROM "public"."ev_items" ORDER BY 1').fetchall() == [("a",), ("b",)]
+    assert con.sql('SELECT lang FROM "public"."ev_meta"').fetchall() == [("en",)]

@@ -89,14 +89,17 @@ def test_partitions_df_layout_stats(spark, sf_dir, tmp_path):
         spark, str(tmp_path / "pt"), src.schema, PartitionSpec.bucket("event_id", 4)
     )
     t.append(src, stat_cols=["event_id"])
-    # skew it: append a second copy of ONE bucket's rows
+    # skew it: append a second copy of ONE bucket's rows, keys unchanged so
+    # the copy lands in that same bucket
     hot = t.read().filter(F.pmod(F.xxhash64("event_id"), F.lit(4)) == 0)
-    t.append(hot.withColumn("event_id", F.col("event_id") + 10_000_000))
+    t.append(hot)
     pdf = {r["partition"]: r.asDict() for r in t.partitions_df().collect()}
     assert sum(p["rows"] for p in pdf.values()) == t.read().count()
     assert all(p["files"] >= 1 for p in pdf.values())
     ratios = {k: p["bytes_vs_median"] for k, p in pdf.items()}
-    assert max(ratios.values()) > 1.0  # the doubled bucket stands out
+    # the doubled bucket stands out
+    assert max(ratios, key=ratios.get) == '{"p_bucket": 0}'
+    assert ratios['{"p_bucket": 0}'] > 1.5
 
 
 def test_snapshots_df_history_with_tags(spark, sf_dir, tmp_path):
